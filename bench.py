@@ -167,7 +167,9 @@ def main() -> None:
                 "sf": sf,
                 "calibration_scan_sec": calib,
                 "master": spark.sparkContext.master,
-                "cpus": int(cpus),
+                # parallelism the master resolved to: SPARK_GRAFT_CPUS may
+                # be "*", which int() would reject after every timing ran
+                "cpus": spark.sparkContext.defaultParallelism,
                 "parallel_probe_sec": probe,
                 "queries_normalized": norm,
                 "normalized_total": round(total / calib, 2) if calib else None,

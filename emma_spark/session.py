@@ -20,6 +20,24 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Capacity of Spark's generated-class cache (default 100, LRU). The
+# engine's working set is larger than that, so at 100 every class is
+# evicted before its next use and each warm rerun recompiles it.
+# Distinct classes compiled by a cold run of the 21 headline queries at
+# sf0.1 on a 4-core host (registry order; a class shared with an earlier
+# query counts once): graph_pagerank_sf 40, graph_pagerank 39,
+# ml_gbdt_residual_boost 32, ml_kmeans_assign 3, ml_gridsearch_ridge 21,
+# ann_ivf_pq_topk 43, dedup_minhash_pairs 12, pipeline_corpus_curation
+# 41, text_bm25_scores 9, sketch_countmin_tokens 21, ann_topk_cosine 11,
+# stream_watermark_append 33, stream_tumbling_counts 2,
+# groupby_agg_pricing 8, dedup_exact 5, geo_radius_join 12,
+# flatmap_wordcount 5, join_multiway_revenue 16, window_topn_per_group
+# 14, incremental_merge_upsert 12, events_bitmap_dau 7 -- 386 in total.
+# 1000 leaves 2.6x headroom over that. A warm rotation through the 21
+# recompiles ~404 classes at 100 entries and 2 at 1000; after three
+# rotations the driver held 180.5 MB of Metaspace at 1000, 178.2 at 100.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app_name: str = "emma-spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -30,6 +48,14 @@ def get_spark(app_name: str = "emma-spark", master: str | None = None) -> SparkS
     - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound;
       on a cluster set it ~2-3x total cores.
     - Arrow on: every pandas UDF / ``mapInPandas`` crossing is batched.
+    - The generated-class cache holds ``CODEGEN_CACHE_ENTRIES`` classes,
+      so a long-lived session that reruns the same plan shapes compiles
+      each one once.
+
+    ``spark.sql.codegen.cache.maxEntries`` is a static conf, and the
+    cache is per JVM: it is sized when the first session in the JVM
+    triggers codegen. If a session built elsewhere got there first, the
+    cache keeps that session's size and this call does not change it.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -46,21 +72,22 @@ def get_spark(app_name: str = "emma-spark", master: str | None = None) -> SparkS
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # r12 (optimization): PySpark 4 wraps EVERY DataFrame API call in
-        # call-site capture for error context — a Python stack walk plus
-        # ~4 py4j round trips (conf.get + PySparkCurrentOrigin.set/clear)
-        # PER CALL. Measured with cProfile at sf0.1: plan CONSTRUCTION is
-        # 45-75% of headline query wall time, and this wrapper is ~55% of
-        # construction (ml_gbdt_residual_boost 2.30s -> 1.30s, pipeline
-        # _corpus_curation 1.94s -> 1.14s with it off). Driver-side plan
-        # building is serial overhead at ANY cluster scale (guide §5: the
-        # driver should do almost no work). Cost: error messages lose the
-        # Python-file:line fragment (JVM-side plan context is unaffected).
-        # Env-overridable for interactive debugging sessions ("1"/
-        # "true"/"yes" all enable — r12 ADVICE: the raw string was
-        # passed through, so "1" silently disabled). NOTE: PySpark
-        # caches is_debugging_enabled() process-wide on first use; the
-        # conf must be set on the FIRST session created in the process.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # PySpark 4 wraps EVERY DataFrame API call in call-site capture
+        # for error context: a Python stack walk plus ~4 py4j round trips
+        # (conf.get + PySparkCurrentOrigin.set/clear) PER CALL. Measured
+        # with cProfile at sf0.1, turning it off cut the Python-side
+        # plan-building time of ml_gbdt_residual_boost from 2.30 s to
+        # 1.30 s and of pipeline_corpus_curation from 1.94 s to 1.14 s.
+        # (Those build times also hold the Spark jobs that pinned
+        # subplans run under AQE while the plan is built, so they are not
+        # a pure plan-construction or codegen floor.) Driver-side plan
+        # building is serial overhead at ANY cluster scale. Cost: error
+        # messages lose the Python-file:line fragment (JVM-side plan
+        # context is unaffected). SPARK_GRAFT_DF_DEBUG="1"/"true"/"yes"
+        # turns it back on for interactive debugging. PySpark caches
+        # is_debugging_enabled() process-wide on first use, so the conf
+        # must be set on the FIRST session created in the process.
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
             "true"

@@ -414,11 +414,15 @@ def run_to_memory(
     master the default placement is unchanged (executors must reach
     the checkpoint; node-local RAM would break that), and
     ``SPARK_GRAFT_STREAM_CKPT`` overrides the base dir everywhere
-    (set it to shared storage for a durable-drain deployment)."""
+    (set it to shared storage for a durable-drain deployment). A
+    scheme-qualified base (``file://``, ``hdfs://``, ``s3a://``, …) is
+    cleaned up through the Hadoop FileSystem of the path; a plain local
+    path is removed with ``shutil.rmtree``."""
     import os
     import shutil
     import tempfile
     import uuid as _uuid
+    from urllib.parse import urlsplit
 
     spark = stream_df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -445,7 +449,11 @@ def run_to_memory(
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if ckpt is not None:
+        if ckpt is not None and urlsplit(ckpt).scheme:
+            path = spark._jvm.org.apache.hadoop.fs.Path(ckpt)
+            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs.delete(path, True)
+        elif ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -46,6 +46,20 @@ def test_stream_tumbling_equals_batch(spark, staged_events):
     assert as_bag(got.collect()) == as_bag(want.collect())
 
 
+def test_drain_removes_checkpoint_under_scheme_qualified_base(
+    spark, staged_events, tmp_path, monkeypatch
+):
+    """A ``file://`` checkpoint base is not a local path to ``shutil``:
+    the drain must still delete its checkpoint directory, through the
+    Hadoop FileSystem, instead of leaking one per drain."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT", f"file://{tmp_path}")
+    batch = spark.read.parquet(staged_events)
+    stream = S.read_stream_parquet(spark, staged_events, batch.schema)
+    agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    S.run_to_memory(agg, f"ck_{uuid.uuid4().hex[:8]}", output_mode="complete")
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_stream_session_window_equals_batch(spark, staged_events):
     batch = spark.read.parquet(staged_events)
     stream = S.read_stream_parquet(spark, staged_events, batch.schema)
