@@ -155,7 +155,7 @@ def _power_iterate(edges, nodes, pr0, teleport_col, d100, iters, gate):
     pr = pr0
     last_ids: set = set()
     superseded: set = set()
-    # r13 (r12 ADVICE): lazy-chained pins mean the block manager holds
+    # lazy-chained pins mean the block manager holds
     # every in-flight rank table until the next EAGER barrier, so a
     # deep iteration would peak at iters·|V| rows. An eager flush every
     # _FLUSH_EVERY rounds bounds the peak at _FLUSH_EVERY·|V| while
@@ -194,7 +194,7 @@ def _power_iterate(edges, nodes, pr0, teleport_col, d100, iters, gate):
     # needed by anything reachable
     _release_ids(sc, superseded | e_ids | d_ids)
     # hand the caller the final pin's release handle (mirrors
-    # fixpoint's _ckpt_ids contract — r8 ADVICE): without it each
+    # fixpoint's _ckpt_ids contract): without it each
     # large-graph pagerank call leaves one checkpointed rank table
     # pinned until JVM GC. Empty when the size gate never pinned.
     if last_ids:

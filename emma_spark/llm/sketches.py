@@ -75,7 +75,7 @@ def countmin_build(
     # weights must land as non-null BIGINT: double/decimal weights would
     # silently change countmin_estimate's min() arithmetic type, and an
     # all-NULL cell would return NULL where the count path returns a
-    # number (ADVICE r5) — cast row-side, coalesce NULL weight to 0
+    # number — cast row-side, coalesce NULL weight to 0
     wcol = (
         F.coalesce(F.col(weight_col).cast("bigint"), F.lit(0).cast("bigint"))
         if weight_col

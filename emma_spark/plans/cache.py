@@ -101,7 +101,7 @@ def configure_pinning(reliable: bool = False, checkpoint_dir: str | None = None)
     loss at the cost of a DFS write per pin. Right for multi-hour
     cluster runs where re-running from scratch costs more than the
     write. This makes the tradeoff documented on every pin site
-    SELECTABLE instead of prose (r4 verdict item #5)."""
+    SELECTABLE instead of prose."""
     _pin_conf["reliable"] = bool(reliable)
     _pin_conf["checkpoint_dir"] = checkpoint_dir
 

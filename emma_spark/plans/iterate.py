@@ -69,7 +69,7 @@ def carry_ckpt(df, src):
     knows when the result has been materialized — can free the state
     blocks via :func:`release`. Without this, lib functions returning
     ``bag.df`` would drop the only handle and leak one pinned state
-    table per invocation on a long-lived driver (r8 VERDICT ask #8)."""
+    table per invocation on a long-lived driver."""
     ids = getattr(src, "_ckpt_ids", None)
     if ids:
         df._ckpt_ids = ids

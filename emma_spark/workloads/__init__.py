@@ -29,8 +29,8 @@ def rd(col, dp: int):
     silently maps NaN→0 and ±inf→±Long.MaxValue (even under ANSI)
     where DuckDB's floor keeps them — without the guard a stray NaN
     quietly becomes a zero (and an inf a garbage clamp) in the output
-    instead of loudly poisoning it (r8 NaN/inf fuzz,
-    tools/fuzzcheck_nan.py).
+    instead of loudly poisoning it (the NaN/inf fuzz tier,
+    `python tools/fuzz.py nan`).
 
     Returns DOUBLE for ANY input type (the non-finite branch forces
     the CASE's type unification to double) — callers quantizing a

@@ -9,9 +9,13 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 
 import duckdb
 import pytest
+
+# the checkout's own emma_spark and tools, whatever the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # tiny-data test runs: small shuffle fan-out beats 32-way task overhead
 os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")

@@ -256,3 +256,46 @@ def test_ml_lib_empty_training_contracts(spark):
         linreg_train(empty_inst, iterations=1)
     with pytest.raises(ValueError, match="empty"):
         logreg_train(empty_inst, iterations=1)
+
+
+# ---------------------------------------------------------------- emma surface
+def test_uncalled_emma_surface_matches_oracles(spark, tables, duck):
+    """Fold algebras and vector/encoding ops no registry query calls,
+    each checked against DuckDB or plain Python."""
+    from emma_spark.core import DataBag
+    from emma_spark.functions import alg as A
+    from emma_spark.lib import linalg as L
+    from emma_spark.lib.ml import features as feat
+
+    orders = tables["orders"]
+    got = orders.fold(
+        A.MinBy("o_custkey", "o_orderkey"), A.MaxBy("o_custkey", "o_orderkey"),
+        A.IsEmpty(), A.CollectList("o_custkey", sort=True),
+        A.CollectSet("o_custkey", sort=True),
+    )
+    want = duck.execute(
+        "SELECT arg_min(o_custkey, o_orderkey), arg_max(o_custkey, o_orderkey),"
+        " count(*) = 0, list_sort(list(o_custkey)),"
+        " list_sort(list(DISTINCT o_custkey)) FROM orders"
+    ).fetchone()
+    assert got == tuple(want)
+    assert DataBag(orders.df.limit(0)).fold(A.IsEmpty()) is True
+
+    x, y, a = [1.5, -2.0, 0.0, 4.25], [0.5, 3.0, -1.0, 2.0], 2.5
+    r = spark.createDataFrame([(x, y)], ["x", "y"]).select(
+        L.vadd("x", "y").alias("add"), L.vsub("x", "y").alias("sub"),
+        L.axpy(a, F.col("x"), F.col("y")).alias("axpy"),
+        L.norm2(F.col("x")).alias("norm"),
+    ).first()
+    assert r["add"] == [u + v for u, v in zip(x, y)]
+    assert r["sub"] == [u - v for u, v in zip(x, y)]
+    assert r["axpy"] == [a * u + v for u, v in zip(x, y)]
+    assert r["norm"] == pytest.approx(math.sqrt(sum(u * u for u in x)))
+
+    toks = ["the", "fox", "the", "dog", "a"]
+    n = 8
+    hashes = dict(spark.createDataFrame([(t,) for t in toks], ["t"]).select(
+        "t", F.pmod(F.xxhash64("t"), F.lit(n)).alias("h")).collect())
+    enc = spark.createDataFrame([(toks,)], ["toks"]).select(
+        feat.encode_bin_hash(F.col("toks"), n).alias("m")).first()["m"]
+    assert enc == {hashes[t]: 1.0 for t in toks}

@@ -9,13 +9,9 @@ The audit itself (tools/scanaudit.py) runs registry-wide in the
 round-close ritual; this subset exists so the worst fixed instances
 (48x, 28x, 24x, 14x compiled fact scans) fire on every commit.
 """
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.scanaudit import scan_counts  # noqa: E402
+from tools.scanaudit import scan_counts
 
 SF = "/root/testdata/sf0.001"
 

@@ -11,11 +11,7 @@ resolution semantics that broke during development:
 * closure reachability through module aliases.
 """
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.staleness import (  # noqa: E402
+from tools.staleness import (
     ModuleIndex, _refs_in, closure_parts, changed_deps, query_sources,
 )
 

@@ -306,7 +306,7 @@ def test_watermark_epoch_floor_contract(spark, tmp_path):
     post-epoch windows from the same corpus emit. If this test ever
     fails with pre-1970 rows PRESENT, Spark lifted the bound: delete
     the with_watermark domain note and re-admit stream_* to
-    tools/fuzzcheck_epoch.py."""
+    the epoch row of tools/fuzz.py."""
     import uuid
 
     from emma_spark.streaming import api as S

@@ -28,10 +28,11 @@ Defaults to /root/testdata/sf0.01 and all queries.
 from __future__ import annotations
 
 import datetime
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.typecheck import duck_output_types, pair_problems  # noqa: E402
 

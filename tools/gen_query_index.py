@@ -1,7 +1,8 @@
 """Regenerate docs/QUERIES.md from the workload registry."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from emma_spark.workloads import load_all  # noqa: E402
 

@@ -18,7 +18,7 @@ Document text is salted per copy (dedup rates must not jump from
 ~0.2% to 90% just because we replicated); embeddings get 4 copies
 with one component nudged per copy (no artificial exact-twin ties).
 
-    python tools/gen_sf.py [--out /root/repo/.local/sf1] [--copies 10]
+    python tools/gen_sf.py [--out .local/sf1] [--copies 10]
 """
 from __future__ import annotations
 
@@ -159,7 +159,8 @@ def gen(out: str, copies: int = 10) -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/.local/sf1")
+    ap.add_argument("--out", default=os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".local", "sf1"))
     ap.add_argument("--copies", type=int, default=10)
     a = ap.parse_args()
     print(f"generating {a.out} ({a.copies} copies of {SRC})")

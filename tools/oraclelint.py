@@ -25,6 +25,7 @@ reintroduce the classes.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 RULES: list[tuple[str, re.Pattern[str]]] = [
@@ -93,7 +94,7 @@ def _one_arg_trim(sql: str) -> re.Match | None:
 
 
 def lint_oracles() -> list[str]:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from emma_spark.workloads import load_all
 
     problems = []

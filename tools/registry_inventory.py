@@ -7,10 +7,12 @@ oracle status, bench-headline flag. Regenerate after adding queries:
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
@@ -44,7 +46,7 @@ def main() -> None:
             star = " ★" if headline else ""
             lines.append(f"- **{name}**{star} — {first}")
         lines.append("")
-    with open("/root/repo/docs/REGISTRY.md", "w") as fh:
+    with open(os.path.join(ROOT, "docs", "REGISTRY.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote docs/REGISTRY.md: {len(reg)} queries, {len(fams)} families")
 

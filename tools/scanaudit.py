@@ -15,10 +15,11 @@ The audit flags only same-table multiplicity in a single lazy plan.
     python tools/scanaudit.py [--thresh N] [query ...]
 """
 import re
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
